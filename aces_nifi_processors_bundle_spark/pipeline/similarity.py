@@ -69,79 +69,6 @@ def as_double(a: Column) -> Column:
     return a.cast("array<double>")
 
 
-def _build_cosine_kernel():
-    """Arrow-vectorized cosine, BIT-IDENTICAL to `cosine()`'s
-    interpreted fold (round 15, guide §4.2): the loop runs over the
-    DIM axis — acc, |a|² and |b|² each advance one IEEE multiply-add
-    per dimension in index order, exactly the sequential left fold
-    `F.aggregate` (and DuckDB's list_cosine_similarity) computes —
-    while every numpy op is vectorized ACROSS the pair batch. One
-    batch of N pairs costs 3·dim numpy ops instead of N interpreted
-    lambda folds (~60 µs/pair at dim 64, the measured cost that made
-    the similarity scoring stages single-core CPU-bound).
-
-    NULL contract: try_divide's zero-denominator NULL is reproduced by
-    leaving those lanes NaN (Arrow's from_pandas maps NaN → NULL for
-    a double pandas_udf — pinned by test). Inputs are non-null
-    finite vectors by caller contract (every call site filters
-    isNotNull; the synthetic embeddings carry no NaN/Inf), so no
-    other NaN source exists in the kernel.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        A = np.stack(a.to_numpy())
-        B = np.stack(b.to_numpy())
-        n = len(A)
-        acc = np.zeros(n)
-        na = np.zeros(n)
-        nb = np.zeros(n)
-        for d in range(A.shape[1]):
-            ad = A[:, d]
-            bd = B[:, d]
-            acc += ad * bd
-            na += ad * ad
-            nb += bd * bd
-        denom = np.sqrt(na) * np.sqrt(nb)
-        out = np.divide(
-            acc, denom, out=np.full(n, np.nan), where=denom != 0.0
-        )
-        return pd.Series(out)
-
-    # Non-deterministic marking (guide §4.4): downstream isNotNull /
-    # threshold filters on the cos column otherwise get pushed below
-    # the projection and the optimizer DUPLICATES the kernel — two
-    # ArrowEvalPython nodes, every pair serialized and scored twice
-    # (seen live in q_sim_topk's first round-15 plan). The values are
-    # pure functions of the inputs; the marking only pins WHERE the
-    # plan evaluates them.
-    return _cos.asNondeterministic()
-
-
-# One shared UDF object so repeated references inside one projection
-# canonicalize equal and extract as a single ArrowEvalPython column.
-# Built LAZILY on first driver-side use: pandas_udf's DDL return-type
-# parse needs the driver JVM, and executor Python workers import this
-# module when unpickling any of its UDFs (a module-level build crashed
-# foreachBatch tasks — caught live in the r15 baseline sweep).
-_COSINE_KERNEL = None
-
-
-def cosine_batch(a: Column, b: Column) -> Column:
-    """Batch cosine for post-join SCORING projections — same values as
-    `cosine()` (bit-identical fold, NULL on zero norm), evaluated as
-    one Arrow batch kernel instead of per-row interpreted folds. Use
-    on the hot |candidates|-sized projections; `cosine()` stays the
-    reference definition (and the form the oracle SQL mirrors)."""
-    global _COSINE_KERNEL
-    if _COSINE_KERNEL is None:
-        _COSINE_KERNEL = _build_cosine_kernel()
-    return _COSINE_KERNEL(a, b)
-
-
 def _topk_per_query(scored: DataFrame, k: int, n_salts: int = 32) -> DataFrame:
     """Exact per-query top-k over (query_id, neighbor_id, cos) rows,
     ranked by (cos desc, neighbor_id asc), as a salted two-phase agg.
@@ -1030,9 +957,9 @@ def semantic_dedup(
             "cluster_id", F.col("vid").alias("id_b"), F.col("v").alias("vb")
         )
         pairs = a.join(b, "cluster_id").filter(F.col("id_a") < F.col("id_b"))
-    # ONE kernel evaluation: project the score, then filter the column
-    # (the kernel is nondeterministic-marked, so the filter cannot be
-    # pushed into a second evaluation below the projection)
+    # score each candidate pair with the interpreted cosine() fold,
+    # then keep pairs at or above the threshold (NaN and zero-norm
+    # NULL scores never pass)
     dropped = (
         pairs.select(
             "id_b", cosine(F.col("va"), F.col("vb")).alias("_pc")

@@ -117,10 +117,9 @@ def ensure_fanout_parallelism(df: DataFrame) -> DataFrame:
     frames (no .rdd) pass through untouched; all engine operators are
     partitioning-agnostic (order-proof aggregates discipline), so
     results are identical either way."""
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:
+    if df.isStreaming:
         return df
+    n = df.rdd.getNumPartitions()
     target = df.sparkSession.sparkContext.defaultParallelism
     if n == 0 or n >= target:
         return df

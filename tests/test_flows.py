@@ -1095,27 +1095,6 @@ def test_dsir_select_stage_filters_to_kept(spark, sf_dir):
     assert got == {r["doc_id"]: r["kept"] for r in direct}
 
 
-def test_bpe_train_stage_collect_vocab_path(spark, sf_dir, tmp_path):
-    """The canvas trainer's production knob: collect_vocab=True must
-    persist the IDENTICAL merge table (election equivalence holds
-    through the flow layer and the store round-trip)."""
-    from aces_nifi_processors_bundle_spark.flows import build_flow
-
-    slow = build_flow(spark, [
-        {"op": "load", "table": "documents"},
-        {"op": "bpe_train", "path": str(tmp_path / "m1"),
-         "num_merges": 8},
-    ], sf_dir).collect()
-    fast = build_flow(spark, [
-        {"op": "load", "table": "documents"},
-        {"op": "bpe_train", "path": str(tmp_path / "m2"),
-         "num_merges": 8, "collect_vocab": True, "min_count": 1},
-    ], sf_dir).collect()
-    assert [
-        (r["rank"], r["lhs"], r["rhs"]) for r in slow
-    ] == [(r["rank"], r["lhs"], r["rhs"]) for r in fast]
-
-
 def test_dsir_fit_score_registered_lifecycle(spark, sf_dir, tmp_path):
     """The registered-selection-model lifecycle (round 12, the
     tokenizer-register shape): dsir_fit persists the lambda table as

@@ -1662,16 +1662,17 @@ def test_bpe_token_counts_per_doc(spark):
     assert got == {1: 3, 2: 0, 3: 0, 4: 5}
 
 
-def test_bpe_fold_chunked_equals_unchunked(spark):
-    """The production-merge-count envelope (round 13): segmenting the
-    replace chain every merge_chunk_size ranks (localCheckpoint plan
-    cuts) must reproduce the single-expression fold EXACTLY — counts
-    AND the full encode stream — for chunk sizes that split the table
-    at every alignment, including mid-composite-dependency. Also: a
-    SYNTHETIC >=1k-rank table (the chain ('a','b'), ('ab','b'), ... —
-    each rank consumes the previous rank's output, the worst
-    dependency shape) folds correctly chunked, where the unchunked
-    expression would be a 1k-deep Catalyst tree."""
+def test_bpe_fold_chunked_equals_unchunked(spark, monkeypatch):
+    """The production-merge-count envelope: segmenting the replace
+    chain every BPE_FOLD_CHUNK ranks (localCheckpoint plan cuts) must
+    reproduce the single-expression fold EXACTLY — counts AND the full
+    encode stream — for chunk sizes that split the table at every
+    alignment, including mid-composite-dependency. Also: a SYNTHETIC
+    >=1k-rank table (the chain ('a','b'), ('ab','b'), ... — each rank
+    consumes the previous rank's output, the worst dependency shape)
+    folds correctly chunked, where the unchunked expression would be a
+    1k-deep Catalyst tree."""
+    from aces_nifi_processors_bundle_spark.pipeline import text
     from aces_nifi_processors_bundle_spark.pipeline.text import (
         bpe_encode,
         bpe_token_counts,
@@ -1687,10 +1688,11 @@ def test_bpe_fold_chunked_equals_unchunked(spark):
     )
     base_enc = sorted(map(tuple, bpe_encode(df).collect()))
     for ck in (1, 3, 7, 64):
+        monkeypatch.setattr(text, "BPE_FOLD_CHUNK", ck)
         assert sorted(map(tuple, bpe_token_counts(
-            df, merge_chunk_size=ck).collect())) == base_counts, ck
+            df).collect())) == base_counts, ck
         assert sorted(map(tuple, bpe_encode(
-            df, merge_chunk_size=ck).collect())) == base_enc, ck
+            df).collect())) == base_enc, ck
     # >=1k ranks, every rank dependent on its predecessor: 'a' + 'b'*n
     # tokenizes to exactly ONE token once all n merges applied, and to
     # (n - m + 1) tokens under the first m merges.
@@ -1700,8 +1702,9 @@ def test_bpe_fold_chunked_equals_unchunked(spark):
         [(1, "a" + "b" * n), (2, "a" + "b" * 400), (3, "bb a")],
         "doc_id long, text string",
     )
+    monkeypatch.setattr(text, "BPE_FOLD_CHUNK", 100)
     got = {r["doc_id"]: r["n_tokens_bpe"] for r in bpe_token_counts(
-        big, merges=chain, merge_chunk_size=100).collect()}
+        big, merges=chain).collect()}
     # doc 1: a+b^1000 -> single token; doc 2: a+b^400 -> 'ab^400' is
     # rank 400's output, fully merged -> 1; doc 3: 'bb' never merges
     # (no 'a' anchor) -> 2 tokens + 'a' -> 3 total... 'a' alone = 1.
@@ -1745,58 +1748,17 @@ def test_pack_materialize_chops_exactly_and_straddles(spark):
         pack_materialize(tokens, plan, 0)
 
 
-def test_bpe_arrow_engine_equals_fold(spark):
-    """The vocabulary-keyed Arrow kernel (engine='arrow', round 13)
-    must reproduce the replace fold EXACTLY — counts and the full
-    (id, pos, token) encode stream — on the fixture table, a trained
-    table, planted untrained symbols (char fallback), and the 1k-rank
-    dependent chain (where the kernel's one vocab pass replaces ~6
-    checkpointed fold segments). Bad engine name is loud."""
-    from aces_nifi_processors_bundle_spark.pipeline.text import (
-        bpe_encode,
-        bpe_token_counts,
-        bpe_train,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "The cat sat on the mat"), (2, "which 2000 things!"),
-         (3, "internationalization routines qqq zz"), (4, "")],
-        "doc_id long, text string",
-    )
-    for merges in (None, bpe_train(df, num_merges=12)):
-        want_c = sorted(map(tuple, bpe_token_counts(
-            df, merges=merges).collect()))
-        got_c = sorted(map(tuple, bpe_token_counts(
-            df, merges=merges, engine="arrow").collect()))
-        assert got_c == want_c
-        want_e = sorted(map(tuple, bpe_encode(df, merges=merges).collect()))
-        got_e = sorted(map(tuple, bpe_encode(
-            df, merges=merges, engine="arrow").collect()))
-        assert got_e == want_e
-    n = 1000
-    chain = [("a" + "b" * i, "b") for i in range(n)]
-    big = spark.createDataFrame(
-        [(1, "a" + "b" * n), (2, "a" + "b" * 400), (3, "bb a")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["n_tokens_bpe"] for r in bpe_token_counts(
-        big, merges=chain, engine="arrow").collect()}
-    assert got == {1: 1, 2: 1, 3: 3}
-    with pytest.raises(ValueError, match="engine"):
-        bpe_token_counts(df, engine="nope")
-    with pytest.raises(ValueError, match="engine"):
-        bpe_encode(df, engine="nope")
-
-
 def test_bpe_local_vocab_frames_equal_distributed(spark):
-    """The driver-local derived frames (round 14 optimization) must be
-    ROW-IDENTICAL to their distributed siblings: bpe_vocab_local ==
-    bpe_vocab, and encode / count / encode_ids under vocab_tokens ==
-    the fold path — on the fixture corpus (incl. an empty doc and
-    untrained symbols) under both the documented table and a trained
-    one. A word piece missing from vocab_tokens RAISES instead of
-    silently dropping/undercounting."""
+    """The driver-local derived frames must be ROW-IDENTICAL to their
+    distributed siblings: bpe_vocab_local == bpe_vocab, and encode /
+    count / encode_ids under vocab_tokens == the fold path — on the
+    fixture corpus (incl. an empty doc and untrained symbols) under
+    both the documented table and a trained one, and on the 1k-rank
+    dependent chain where the per-word loop replaces ~6 checkpointed
+    fold segments. A word piece missing from vocab_tokens RAISES
+    instead of silently dropping/undercounting."""
     from aces_nifi_processors_bundle_spark.pipeline.text import (
+        BPE_MERGES,
         bpe_encode,
         bpe_encode_ids,
         bpe_token_counts,
@@ -1814,6 +1776,29 @@ def test_bpe_local_vocab_frames_equal_distributed(spark):
     merges, vocab_counts = bpe_train_collected(df, num_merges=12)
     words = [w for w, _ in vocab_counts]
     vt = bpe_vocab_tokens_local(spark, words, merges)
+
+    # the documented fixture table through the per-word loop == fold
+    vt_fixed = bpe_vocab_tokens_local(spark, words, BPE_MERGES)
+    assert sorted(map(tuple, bpe_token_counts(
+        df, vocab_tokens=vt_fixed).collect())) == sorted(
+        map(tuple, bpe_token_counts(df).collect()))
+    assert sorted(map(tuple, bpe_encode(
+        df, vocab_tokens=vt_fixed).collect())) == sorted(
+        map(tuple, bpe_encode(df).collect()))
+
+    # 1k-rank dependent chain: each rank consumes the previous output
+    n = 1000
+    chain = [("a" + "b" * i, "b") for i in range(n)]
+    big = spark.createDataFrame(
+        [(1, "a" + "b" * n), (2, "a" + "b" * 400), (3, "bb a")],
+        "doc_id long, text string",
+    )
+    big_vt = bpe_vocab_tokens_local(
+        spark, ["a" + "b" * n, "a" + "b" * 400, "bb", "a"], chain
+    )
+    got = {r["doc_id"]: r["n_tokens_bpe"] for r in bpe_token_counts(
+        big, merges=chain, vocab_tokens=big_vt).collect()}
+    assert got == {1: 1, 2: 1, 3: 3}
 
     want_v = sorted(map(tuple, bpe_vocab(df, merges).collect()))
     got_v = sorted(map(tuple, bpe_vocab_local(spark, words, merges)
@@ -5237,9 +5222,10 @@ def test_anchor_store_compaction_preserves_routing(spark, tmp_path):
     assert frag.read().where("doc_id = 2").count() == 0
 
 
-def _reference_bpe_train(texts, num_merges):
+def _reference_bpe_train(texts, num_merges, min_count=1):
     """Sennrich get_stats/merge loop in pure Python — cross-checks
-    bpe_train's distributed elections."""
+    bpe_train's elections. Pieces seen fewer than min_count times are
+    dropped before training, as bpe_train's min_count does."""
     import re
     from collections import Counter
 
@@ -5249,6 +5235,7 @@ def _reference_bpe_train(texts, num_merges):
             continue
         for w in re.findall(r"[a-z]+|[0-9]+|[^a-z0-9\s\x01]", t.lower()):
             vocab[w] += 1
+    vocab = Counter({w: c for w, c in vocab.items() if c >= min_count})
     state = {w: list(w) for w in vocab}
     merges = []
     for _ in range(num_merges):
@@ -5275,8 +5262,8 @@ def _reference_bpe_train(texts, num_merges):
 
 
 def test_bpe_train_matches_reference(spark, sf_dir):
-    """Distributed bpe_train must elect the same 12 merges, in order,
-    as the pure-Python Sennrich loop on the real corpus; trained-table
+    """bpe_train must elect the same 12 merges, in order, as the
+    pure-Python Sennrich loop on the real corpus; trained-table
     counts must equal the reference tokenization lengths."""
     from aces_nifi_processors_bundle_spark.pipeline.text import (
         bpe_token_counts,
@@ -5316,19 +5303,11 @@ def test_bpe_train_raises_when_pairs_run_dry(spark):
         bpe_train(tiny, num_merges=2)
 
 
-def test_bpe_train_lazy_cuts_cost_fewer_jobs_than_eager_loop(spark):
-    """Round 14: the distributed training loop cuts lineage LAZILY, so
-    each election is ONE driver action (the argmax collect materializes
-    the previous cut's blocks as a side effect) instead of the old
-    collect + eager-localCheckpoint pair. Job-count probe against the
-    pre-round-14 recipe, reconstructed verbatim: same elections,
-    strictly fewer Spark jobs."""
-    from aces_nifi_processors_bundle_spark.pipeline.text import (
-        BPE_DELIM,
-        _bpe_pieces,
-        _bpe_wrap,
-        bpe_train,
-    )
+def test_bpe_train_job_count_independent_of_num_merges(spark):
+    """bpe_train collects the counted piece vocabulary once and elects
+    every merge in driver memory, so it schedules the same number of
+    Spark jobs at 4 merges as at 12 — no per-merge driver round-trip."""
+    from aces_nifi_processors_bundle_spark.pipeline.text import bpe_train
 
     docs = spark.createDataFrame(
         [(1, "the thin cat sat"), (2, "another thing that thins"),
@@ -5345,54 +5324,13 @@ def test_bpe_train_lazy_cuts_cost_fewer_jobs_than_eager_loop(spark):
             sc.setJobGroup(None, None)
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    def eager_recipe(num_merges):
-        # the pre-round-14 loop: eager initial cut, then per election a
-        # 1-row argmax collect AND an eager replace+checkpoint job
-        d = BPE_DELIM
-        piece_counts = (
-            _bpe_pieces(docs, "text", [])
-            .groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-        )
-        vocab = (
-            piece_counts
-            .select("w", "c", _bpe_wrap(F.col("w")).alias("toks"))
-            .localCheckpoint(eager=True)
-        )
-        merges = []
-        for _ in range(num_merges):
-            arr = F.split(
-                F.expr("substring(toks, 2, length(toks) - 2)"), d + d
-            )
-            n = F.greatest(F.size(arr) - 1, F.lit(0))
-            prs = F.zip_with(
-                F.slice(arr, 1, n), F.slice(arr, 2, n),
-                lambda x, y: F.struct(x.alias("l"), y.alias("r")),
-            )
-            best = (
-                vocab.select("c", F.explode(prs).alias("p"))
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("c").alias("cnt"))
-                .orderBy(F.desc("cnt"), F.encode("l", "UTF-8"),
-                         F.encode("r", "UTF-8"))
-                .limit(1)
-                .collect()
-            )
-            left, right = best[0]["l"], best[0]["r"]
-            merges.append((left, right))
-            vocab = vocab.withColumn(
-                "toks",
-                F.replace(
-                    F.col("toks"),
-                    F.lit(d + left + d + d + right + d),
-                    F.lit(d + left + right + d),
-                ),
-            ).localCheckpoint(eager=True)
-        return merges
-
-    want, n_eager = jobs_in("probe_bpe_eager", lambda: eager_recipe(4))
-    got, n_lazy = jobs_in("probe_bpe_lazy", lambda: bpe_train(docs, num_merges=4))
-    assert got == want
-    assert n_lazy < n_eager
+    few, n_few = jobs_in("probe_bpe_4", lambda: bpe_train(docs, num_merges=4))
+    many, n_many = jobs_in(
+        "probe_bpe_12", lambda: bpe_train(docs, num_merges=12)
+    )
+    assert many[:4] == few
+    assert n_few >= 1
+    assert n_many == n_few
 
 
 def test_bpe_encode_flat_offsets_and_consistency(spark):
@@ -5512,39 +5450,63 @@ def test_bpe_train_tiebreak_utf8_bytes_and_non_ascii_corpus(spark):
     assert got[0] == ("b", "a")
 
 
-def test_bpe_train_collect_vocab_equivalent(spark, sf_dir):
-    """The production-merge-count path (collect_vocab=True: one corpus
-    scan, pruned vocabulary collected, incremental in-memory merge
-    loop) must elect the IDENTICAL merge table as the distributed
-    per-merge loop on the real corpus — and must scale to merge
-    counts the distributed loop can't (256 merges in one driver
-    loop, cross-checked against the pure-Python Sennrich reference)."""
+def test_bpe_train_min_count_and_full_inventory_match_reference(
+    spark, sf_dir
+):
+    """bpe_train must elect the IDENTICAL merge table as the
+    pure-Python Sennrich reference on the real corpus under min_count
+    pruning, and at the corpus's FULL merge inventory."""
     from aces_nifi_processors_bundle_spark.pipeline.text import bpe_train
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    slow = bpe_train(docs, num_merges=12)
-    fast = bpe_train(docs, num_merges=12, collect_vocab=True)
-    assert fast == slow
-    # min_count pruning applies identically to both paths
-    slow_p = bpe_train(docs, num_merges=8, min_count=3)
-    fast_p = bpe_train(docs, num_merges=8, min_count=3, collect_vocab=True)
-    assert fast_p == slow_p
+    texts = [r["text"] for r in docs.collect()]
+    # min_count pruning changes elections exactly as dropping the
+    # rare pieces from the reference's vocabulary does
+    want_p, _ = _reference_bpe_train(texts, 8, min_count=3)
+    assert bpe_train(docs, num_merges=8, min_count=3) == want_p
+    # every fixture piece is frequent, so pin the pruning itself on a
+    # corpus where it flips the first election: (c,d) spans 4 singleton
+    # pieces, (a,b) one piece seen twice
+    small = ["ab ab", "cd cde cdf cdg"]
+    sdf = spark.createDataFrame(
+        list(enumerate(small)), "doc_id long, text string"
+    )
+    assert bpe_train(sdf, num_merges=1) == [("c", "d")]
+    assert bpe_train(sdf, num_merges=1, min_count=2) == [("a", "b")]
+    assert _reference_bpe_train(small, 1, min_count=2)[0] == [("a", "b")]
     # production envelope: run the loop to the corpus's FULL merge
     # inventory (89 on this fixture — every word collapses to one
     # symbol), validated against the naive reference loop at every
     # rank (the incremental statistics must not drift as merged
     # symbols become multi-char and pair churn compounds), and the
     # exhaustion beyond it must stay a loud error, not a short table
-    texts = [r["text"] for r in docs.collect()]
     want_all, _ = _reference_bpe_train(texts, 10_000)
     n_all = len(want_all)
     assert n_all >= 80  # the fixture sustains a deep merge chain
-    got_all = bpe_train(docs, num_merges=n_all, collect_vocab=True)
-    assert got_all == want_all
+    assert bpe_train(docs, num_merges=n_all) == want_all
     with pytest.raises(ValueError, match="exhausted"):
-        bpe_train(docs, num_merges=n_all + 1, collect_vocab=True)
+        bpe_train(docs, num_merges=n_all + 1)
     with pytest.raises(ValueError, match="min_count"):
         bpe_train(docs, num_merges=2, min_count=0)
+
+
+def test_bpe_train_vocab_collect_is_bounded(spark, monkeypatch):
+    """The one vocabulary collect fails loudly past BPE_MAX_VOCAB_ROWS,
+    naming bpe_train and min_count; pruning below the bound trains."""
+    from aces_nifi_processors_bundle_spark.pipeline import text
+
+    docs = spark.createDataFrame(
+        [(1, "aa bb cc dd ee aa"), (2, "aa bb ff")],
+        "doc_id long, text string",
+    )
+    # pieces: aa x3, bb x2, cc, dd, ee, ff x1 -> 6 distinct
+    monkeypatch.setattr(text, "BPE_MAX_VOCAB_ROWS", 5)
+    with pytest.raises(ValueError, match="bpe_train.*min_count"):
+        text.bpe_train(docs, num_merges=1)
+    monkeypatch.setattr(text, "BPE_MAX_VOCAB_ROWS", 6)
+    assert text.bpe_train(docs, num_merges=1) == [("a", "a")]
+    monkeypatch.setattr(text, "BPE_MAX_VOCAB_ROWS", 2)
+    assert text.bpe_train(docs, num_merges=1, min_count=2) == [("a", "a")]
 
 
 def test_bpe_roundtrip_exact_and_oov_fallback(spark):
@@ -6095,6 +6057,10 @@ def test_fanout_parallelism_floor_is_conditional_and_result_invariant(spark):
 
     wide = spark.range(1000).repartition(target + 3)
     assert ensure_fanout_parallelism(wide) is wide  # no extra exchange
+
+    # a streaming frame has no .rdd: it comes back untouched
+    stream = spark.readStream.format("rate").load()
+    assert ensure_fanout_parallelism(stream) is stream
 
 
 def test_trigram_lm_window_equals_two_aggregate_derivation(spark):

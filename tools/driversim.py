@@ -2,9 +2,6 @@
 sf0.01 under a default (ANSI, host-TZ) session and compares against
 the DuckDB oracle with the conftest type-strict normalizer.
 Usage: TZ=America/New_York python tools/driversim.py [only_prefix...|@firstN]"""
-import datetime
-import decimal
-import math
 import os
 import sys
 
@@ -17,6 +14,7 @@ spark.sparkContext.setLogLevel("ERROR")
 import duckdb
 
 import __spark_entry__ as e
+from tests.conftest import _norm
 
 con = duckdb.connect()
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
@@ -24,32 +22,6 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
     p = f"/root/testdata/sf0.01/{t}.parquet"
     if os.path.exists(p):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-
-
-def _norm(v):
-    if v is None:
-        return ("none", "")
-    if isinstance(v, bool):
-        return ("bool", str(v))
-    if isinstance(v, int):
-        return ("int", str(v))
-    if isinstance(v, float):
-        if math.isnan(v):
-            return ("float", "NaN")
-        return ("float", repr(v))
-    if isinstance(v, decimal.Decimal):
-        return ("decimal", str(v))
-    if isinstance(v, (list, tuple)):
-        return ("list", tuple(_norm(x) for x in v))
-    if isinstance(v, dict):
-        return ("map", tuple(sorted((k, _norm(x)) for k, x in v.items())))
-    if isinstance(v, datetime.datetime):
-        return ("timestamp", v.isoformat())
-    if isinstance(v, datetime.date):
-        return ("date", v.isoformat())
-    if isinstance(v, (bytes, bytearray)):
-        return ("binary", bytes(v).hex())
-    return (type(v).__name__, str(v))
 
 
 qs, osql = e.queries(), e.oracle_sql()
@@ -68,7 +40,8 @@ for name in names:
         sdf = qs[name](spark, "/root/testdata/sf0.01")
         cols = sorted(sdf.columns)
         srows = sorted(
-            tuple(_norm(r[c]) for c in cols) for r in sdf.collect()
+            (tuple(_norm(r[c]) for c in cols) for r in sdf.collect()),
+            key=repr,
         )
         if name not in osql:
             print(name, "rows-only:", len(srows), flush=True)
@@ -77,7 +50,8 @@ for name in names:
         dcols = [d[0] for d in cur.description]
         idx = [dcols.index(c) for c in cols]
         drows = sorted(
-            tuple(_norm(row[i]) for i in idx) for row in cur.fetchall()
+            (tuple(_norm(row[i]) for i in idx) for row in cur.fetchall()),
+            key=repr,
         )
         ok = srows == drows
         if not ok:

@@ -1,18 +1,14 @@
-"""Within-ONE-session A/B probe for the round-14 strategy toggles.
+"""Within-ONE-session A/B probe for a strategy toggle.
 
 The shared host's ambient load makes cross-session brackets noisy
 (min-of-3 drifted 15%+ on untouched control queries); toggling the
 strategy INSIDE one warmed session and interleaving A/B runs
-back-to-back makes each pair face the same load. Two toggles:
+back-to-back makes each pair face the same load. The toggle is
+quantile pairing: QUANTILE_PAIRING_MAX_DF = 256 (bounded in-task
+pairing) vs 0 (the self-join fallback) on q_dedup_ngram_quantile /
+q_containment_quantile / q_corpus_card.
 
-- quantile pairing: QUANTILE_PAIRING_MAX_DF = 256 (bounded in-task
-  pairing) vs 0 (the round-10 self-join fallback — the pre-change
-  physical strategy) on q_dedup_ngram_quantile / q_containment_quantile
-  / q_corpus_card.
-- bpe cadence: bpe_train (lazy cuts) vs the pre-round-14 eager loop
-  reconstructed verbatim, on the documents corpus at $SPARK_GRAFT_SF_DIR.
-
-Prints one JSON line per toggle and appends to bench_logs/probes.jsonl.
+Prints one JSON line and appends it to bench_logs/probes.jsonl.
 """
 
 from __future__ import annotations
@@ -99,91 +95,6 @@ def main() -> None:
             n: {k: min(v) for k, v in d.items()} for n, d in times.items()
         },
         "all": times,
-    }
-    print(json.dumps(out))
-    with open("bench_logs/probes.jsonl", "a") as f:
-        f.write(json.dumps(out) + "\n")
-
-    if os.environ.get("TOGGLE_SKIP_BPE"):
-        spark.stop()
-        return
-
-    # --- BPE cadence toggle -------------------------------------------
-    from aces_nifi_processors_bundle_spark.pipeline.text import (
-        BPE_DELIM,
-        _bpe_pieces,
-        _bpe_wrap,
-        bpe_train,
-    )
-    from aces_nifi_processors_bundle_spark.sources.registry import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def eager_recipe(num_merges: int):
-        d = BPE_DELIM
-        piece_counts = (
-            _bpe_pieces(docs, "text", [])
-            .groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-        )
-        vocab = (
-            piece_counts
-            .select("w", "c", _bpe_wrap(F.col("w")).alias("toks"))
-            .localCheckpoint(eager=True)
-        )
-        merges = []
-        for _ in range(num_merges):
-            arr = F.split(
-                F.expr("substring(toks, 2, length(toks) - 2)"), d + d
-            )
-            n = F.greatest(F.size(arr) - 1, F.lit(0))
-            prs = F.zip_with(
-                F.slice(arr, 1, n), F.slice(arr, 2, n),
-                lambda x, y: F.struct(x.alias("l"), y.alias("r")),
-            )
-            best = (
-                vocab.select("c", F.explode(prs).alias("p"))
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("c").alias("cnt"))
-                .orderBy(F.desc("cnt"), F.encode("l", "UTF-8"),
-                         F.encode("r", "UTF-8"))
-                .limit(1)
-                .collect()
-            )
-            left, right = best[0]["l"], best[0]["r"]
-            merges.append((left, right))
-            vocab = vocab.withColumn(
-                "toks",
-                F.replace(
-                    F.col("toks"),
-                    F.lit(d + left + d + d + right + d),
-                    F.lit(d + left + right + d),
-                ),
-            ).localCheckpoint(eager=True)
-        return merges
-
-    bt: dict[str, list[float]] = {"lazy": [], "eager": []}
-    parity = True
-    for r in range(runs):
-        res: dict[str, list] = {}
-        arms = ["lazy", "eager"]
-        if r % 2 == 1:
-            arms.reverse()  # cancel order/warm-in bias across reps
-        for label in arms:
-            spark.sparkContext.setJobDescription(f"toggle:bpe_train:{label}")
-            t0 = time.perf_counter()
-            res[label] = (
-                bpe_train(docs, num_merges=20)
-                if label == "lazy" else eager_recipe(20)
-            )
-            bt[label].append(round(time.perf_counter() - t0, 3))
-        parity = parity and (res["lazy"] == res["eager"])
-    out = {
-        "tag": "toggle_bpe_cadence",
-        "sf_dir": sf_dir,
-        "runs": runs,
-        "queries": {k: min(v) for k, v in bt.items()},
-        "all": bt,
-        "elections_identical": parity,
     }
     print(json.dumps(out))
     with open("bench_logs/probes.jsonl", "a") as f:
